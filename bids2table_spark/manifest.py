@@ -45,35 +45,12 @@ MANIFEST_DDL = (
     "orig_bytes long, enc_bytes long, codecs string, checksum string, "
     "status string, committed_at timestamp, error string"
 )
+SALT_PLAN_DDL = "scope string, pt string, n_salts int"
 
 
 def _paths(out_dir: str) -> tuple[str, str, str]:
     out_dir = out_dir.rstrip("/")
     return f"{out_dir}/blocks", f"{out_dir}/manifest", f"{out_dir}/salt_plan"
-
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def _no_aqe(spark: SparkSession):
-    """Scope-disable adaptive execution for METADATA-sized queries.
-
-    AQE materializes every shuffle as its own query-stage job; on the
-    manifest-derivation tail of encode_job (a read of the just-written
-    ~MB-scale block metadata + a groupBy bounded by the group universe,
-    never input-sized) that turned one aggregate into SEVEN scheduled jobs
-    (round-6 job trace).  With AQE off these run as one classic job each.
-    The conf is session-wide, so the scope is kept as small as possible and
-    restored immediately (concurrent encode_jobs from driver threads would
-    briefly share the setting — worst case they lose AQE on one small
-    query, never correctness)."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 class _phase_timer:
@@ -241,13 +218,6 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
         return None
 
 
-def committed_groups(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    m = read_manifest(spark, out_dir)
-    if m is None:
-        return None
-    return m.filter(F.col("status") == "committed").select("pt", "grp").distinct()
-
-
 def _latest_committed(m: DataFrame, pt_col: str = "pt", as_of=None) -> DataFrame:
     """Latest committed manifest row per (pt, grp) — THE definition of the
     live run for a group; resume verification and the reader must agree on
@@ -321,20 +291,25 @@ def snapshots(spark: SparkSession, out_dir: str) -> DataFrame:
 def load_salt_plan(
     spark: SparkSession, out_dir: str, scope: str = ""
 ) -> dict[str, int]:
-    """Persisted salt plan for ``scope`` (empty = the batch job)."""
+    """Persisted salt plan for ``scope`` (empty = the batch job).
+
+    An unreadable part file (torn by a crash of a writer that predates the
+    atomic rename) is skipped on its own; the rest of the plan still holds
+    every label it recorded.  Dropping the whole plan instead would let a
+    resume re-derive n_salts from the current input and move group labels
+    under already-committed groups."""
     _, _, ppath = _paths(out_dir)
     if not _exists(ppath):
         return {}
-    try:
-        rows = (
-            spark.read.parquet(ppath)
-            .filter(F.col("scope") == scope)
-            .groupBy("pt")
-            .agg(F.min("n_salts").alias("n_salts"))  # deterministic under dup appends
-            .collect()
-        )
-    except Exception:
-        return {}
+    rows = (
+        spark.read.schema(SALT_PLAN_DDL)
+        .option("ignoreCorruptFiles", "true")
+        .parquet(ppath)
+        .filter(F.col("scope") == scope)
+        .groupBy("pt")
+        .agg(F.min("n_salts").alias("n_salts"))  # deterministic under dup appends
+        .collect()
+    )
     return {r["pt"]: int(r["n_salts"]) for r in rows}
 
 
@@ -344,13 +319,14 @@ def _append_salt_plan(
     """Persist new (scope, pt, n_salts) rows.  The plan is a handful of
     rows, so on a local filesystem it is written straight from the driver
     with pyarrow — one fewer Spark job per encode (round 6); the file name
-    is unique, so concurrent appends never clobber.  Non-local URIs keep
-    the Spark write (the driver has no direct filesystem there)."""
+    is unique, so concurrent appends never clobber.  The file is written
+    under a hidden temp name (readers skip dot-files) and renamed into
+    place, so a crash mid-write never leaves a torn part file.  Non-local
+    URIs keep the Spark write (the driver has no direct filesystem there;
+    the task-commit protocol makes it atomic)."""
     rows = sorted(new_pts.items())
     local = ppath.removeprefix("file://")
     if "://" not in local:
-        import uuid
-
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -362,14 +338,15 @@ def _append_salt_plan(
                 "n_salts": pa.array([int(n) for _, n in rows], pa.int32()),
             }
         )
-        pq.write_table(tbl, os.path.join(local, f"part-{uuid.uuid4().hex}.parquet"))
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(local, f".{name}.tmp")
+        pq.write_table(tbl, tmp)
+        os.replace(tmp, os.path.join(local, name))
         return
     from .session import local_df
 
     local_df(
-        spark,
-        [(scope, pt, int(n)) for pt, n in rows],
-        "scope string, pt string, n_salts int",
+        spark, [(scope, pt, int(n)) for pt, n in rows], SALT_PLAN_DDL
     ).coalesce(1).write.mode("append").parquet(ppath)
 
 
@@ -442,8 +419,9 @@ def encode_job(
     Resume is only valid over the SAME input: rows added after the first
     run hash into already-committed groups, which the anti-join would skip
     wholesale — silent data loss.  ``verify_growth`` (default on) compares
-    the input's per-group row counts against the committed manifest and
-    raises on drift; it costs one extra pass over the skipped groups'
+    the input's per-group row counts against the committed manifest rows of
+    this run's group universe (other prefixes are not compared) and raises
+    on drift; it costs one extra pass over the skipped groups'
     input, so callers with an immutability guarantee can disable it.
     Appends belong in a fresh ``group_prefix``/``out_dir`` (the streaming
     path's per-epoch prefix is exactly this).
@@ -560,7 +538,7 @@ def encode_job(
     from .session import local_df
 
     _pt.lap("salt_plan")
-    pending = local_df(spark, all_groups, f"{pt_col} string, grp string")
+    keys_ddl = f"{pt_col} string, grp string"
     mdf = read_manifest(spark, out_dir) if resume else None
     done = None
     if mdf is not None:
@@ -585,10 +563,17 @@ def encode_job(
                 F.size(F.array_except(F.array(*[F.lit(c) for c in cols_now]), cols_arr)) > 0
             ) & (F.col("n_rows") > 0)
             done = latest.filter(~stale).select(pt_col, "grp")
-    n_pending = n_total
+    # the pending set lives on the driver as a list of (pt, grp) keys, bounded
+    # by the group universe: the manifest tail below filters and fills gaps
+    # against it without another Spark job
+    pending = all_groups
     if done is not None:
-        pending = pending.join(done, on=[pt_col, "grp"], how="left_anti")
-        n_pending = pending.count()
+        universe = local_df(spark, all_groups, keys_ddl)
+        pending = [
+            tuple(r)
+            for r in universe.join(done, on=[pt_col, "grp"], how="left_anti").collect()
+        ]
+    n_pending = len(pending)
     if new_cols and n_pending < n_total and on_new_columns == "error":
         raise RuntimeError(
             "input schema grew since the committed run — resuming would "
@@ -611,7 +596,14 @@ def encode_job(
     )
     _pt.lap("pending/resume")
     if done is not None and n_pending < n_total and verify_growth:
-        latest = _latest_committed(mdf, pt_col).select(pt_col, "grp", "n_rows")
+        # only THIS run's group universe is compared: committed groups of
+        # other group_prefixes (earlier streaming epochs, compactions) have
+        # no rows in this input by design and are not drift
+        latest = (
+            _latest_committed(mdf, pt_col)
+            .join(F.broadcast(universe), on=[pt_col, "grp"], how="left_semi")
+            .select(pt_col, "grp", "n_rows")
+        )
         in_counts = (
             grouped.join(F.broadcast(latest.select(pt_col, "grp")), on=[pt_col, "grp"], how="left_semi")
             .groupBy(pt_col, "grp")
@@ -633,8 +625,10 @@ def encode_job(
                 "group_prefix, or pass verify_growth=False if the drift is expected."
             )
     if max_groups is not None:
-        pending = pending.orderBy(pt_col, "grp").limit(max_groups)
-        n_pending = pending.count()
+        # UTF-8 byte order (Spark's string order) is code-point order, so
+        # this is the same slice as an orderBy(pt, grp).limit(max_groups)
+        pending = sorted(pending)[:max_groups]
+        n_pending = len(pending)
     if n_pending == 0:
         if _extra_manifest is not None:
             # a retried compact_job whose encode fully committed last time
@@ -648,7 +642,10 @@ def encode_job(
     if n_pending == n_total:
         todo = grouped  # fresh encode: skip the semi-join entirely
     else:
-        todo = grouped.join(F.broadcast(pending), on=[pt_col, "grp"], how="left_semi")
+        todo = grouped.join(
+            F.broadcast(local_df(spark, pending, keys_ddl)),
+            on=[pt_col, "grp"], how="left_semi",
+        )
     blocks = encode_grouped(
         todo, key_cols=key_cols, pt_col=pt_col, plan=plan,
         block_rows=block_rows, num_partitions=n_pending,
@@ -659,26 +656,22 @@ def encode_job(
     # column, and readers select via the manifest join).  A run_path that
     # already exists means a crashed-then-retried pinned run_id — the only
     # case the block-level dedup window and the mpath-replay summary below
-    # are for; the common fresh run skips both (round-6: they cost two
-    # extra jobs per encode at identical output).
+    # are for.
     fresh_run = not _exists(run_path)
     _pt.lap("pre_encode")
     blocks.write.mode("append").option("compression", "zstd").parquet(run_path)
     _pt.lap("encode_write")
 
-    # 2) … then manifest rows derived from what actually landed on disk.
+    # 2) … then manifest rows derived from what actually landed on disk, by
+    # ONE aggregate over the blocks' metadata columns, collected: at most
+    # one row per group, and the group universe is driver-bounded above.
     # Reading run_path (not the blocks root) means an incremental run's job
     # graph touches only its own output — never the accumulated history.
     # The explicit schema keeps an all-empty-groups write (no part files)
-    # from failing schema inference, and the semi-join on THIS attempt's
-    # pending set keeps a crashed-then-retried pinned run_id from
-    # re-appending manifest rows for groups the first attempt already
-    # committed (the block-level dedup below fixes metrics, not row count).
+    # from failing schema inference.
     from .encode import BLOCKS_DDL_WITH_IDX
 
-    written = spark.read.schema(BLOCKS_DDL_WITH_IDX).parquet(run_path).join(
-        F.broadcast(pending), on=[pt_col, "grp"], how="left_semi"
-    )
+    written = spark.read.schema(BLOCKS_DDL_WITH_IDX).parquet(run_path)
     if not fresh_run:
         # a crashed-then-retried run with a pinned run_id appends a second,
         # bit-identical copy of some blocks; dedup so metrics stay exact
@@ -689,7 +682,7 @@ def encode_job(
             .drop("_rn")
         )
     is_data = F.col("codec") != ERROR_CODEC
-    manifest = (
+    per_group = (
         written.groupBy(pt_col, "grp")
         .agg(
             F.sum(is_data.cast("long")).alias("n_blocks"),
@@ -724,103 +717,70 @@ def encode_job(
             ).alias("checksum"),
             F.max(F.when(~is_data, F.col("meta"))).alias("error"),
         )
-        .withColumn("run_id", F.lit(run_id))
-        # a group is failed only if it has NO data blocks: a retried pinned
-        # run_id leaves the previous attempt's error row in run_path next
-        # to the retry's data blocks, and the stale error must not poison
-        # the successful retry's manifest row
-        .withColumn(
-            "error", F.when(F.col("n_blocks") == 0, F.col("error"))
-        )
-        .withColumn(
-            "status",
-            F.when(F.col("error").isNotNull(), F.lit("failed")).otherwise(F.lit("committed")),
-        )
-        .withColumn("committed_at", F.current_timestamp())
-        .select(
-            pt_col, "grp", "run_id", "n_blocks", "n_rows", "orig_bytes",
-            "enc_bytes", "codecs", "checksum", "status", "committed_at", "error",
-        )
+        .collect()
     )
-    manifest = manifest.cache()  # one computation serves the write AND the
-    # empty-group gap check + fresh-run summary below (re-reading mpath
-    # cost an extra job/run)
-
-    # salt buckets that received ZERO conversations (hash imbalance on a
-    # small n_salts) produce no blocks and hence no manifest row above —
-    # without an explicit committed row they stay pending forever and every
-    # resume re-runs the whole encode.  DISTRIBUTED (round 5): the gap set
-    # is a left anti-join of pending against this run's manifest rows —
-    # written straight out, no `.collect()` of group keys back to the driver
-    # (the cached manifest frame serves it).
-    empties = (
-        pending.join(manifest.select(pt_col, "grp"), on=[pt_col, "grp"], how="left_anti")
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("n_blocks", F.lit(0).cast("long"))
-        .withColumn("n_rows", F.lit(0).cast("long"))
-        .withColumn("orig_bytes", F.lit(0).cast("long"))
-        .withColumn("enc_bytes", F.lit(0).cast("long"))
-        .withColumn("codecs", F.lit("[]"))
-        .withColumn("checksum", F.lit(""))
-        .withColumn("status", F.lit("committed"))
-        .withColumn("committed_at", F.current_timestamp())
-        .withColumn("error", F.lit(None).cast("string"))
-        .select(
-            pt_col, "grp", "run_id", "n_blocks", "n_rows", "orig_bytes",
-            "enc_bytes", "codecs", "checksum", "status", "committed_at",
-            "error",
-        )
+    landed = {(r[pt_col], r["grp"]): r for r in per_group}
+    # one manifest row per group of THIS attempt's pending set: a retried
+    # pinned run_id's run_path also holds blocks of groups the first attempt
+    # already committed, and those must not be re-appended.  A salt bucket
+    # that received ZERO conversations (hash imbalance on a small n_salts)
+    # has no blocks; without an explicit committed gap row it would stay
+    # pending forever and every resume would re-run the whole encode.
+    rows = []
+    for key in pending:
+        r = landed.get(key)
+        if r is None:
+            rows.append((*key, 0, 0, 0, 0, "[]", "", None))
+        else:
+            # a group is failed only if it has NO data blocks: a retried
+            # pinned run_id leaves the previous attempt's error row in
+            # run_path next to the retry's data blocks, and the stale error
+            # must not poison the successful retry's manifest row
+            rows.append((
+                *key, r["n_blocks"], r["n_rows"], r["orig_bytes"], r["enc_bytes"],
+                r["codecs"], r["checksum"], r["error"] if r["n_blocks"] == 0 else None,
+            ))
+    # ONE manifest append: new groups, gap rows and any compaction
+    # tombstones (_extra_manifest) become visible together, and a crash
+    # before it leaves only unreachable orphan blocks.  run_id, status and
+    # committed_at are Spark literals so the file schema marks them NOT
+    # NULL; coalesce(1) keeps one manifest file per commit (Iceberg-style).
+    to_write = local_df(
+        spark, rows,
+        f"{pt_col} string, grp string, n_blocks long, n_rows long, "
+        "orig_bytes long, enc_bytes long, codecs string, checksum string, "
+        "error string",
+    ).select(
+        pt_col, "grp", F.lit(run_id).alias("run_id"), "n_blocks", "n_rows",
+        "orig_bytes", "enc_bytes", "codecs", "checksum",
+        F.when(F.col("error").isNotNull(), F.lit("failed"))
+        .otherwise(F.lit("committed")).alias("status"),
+        F.current_timestamp().alias("committed_at"), "error",
     )
-    # ONE manifest append (round 6: manifest + empties + compaction
-    # tombstones were three separate writes = three Spark jobs; the single
-    # append is also a cleaner commit point — new groups, gap rows and any
-    # supersede become visible together).  _extra_manifest rows (compaction
-    # tombstones) ride in the same append: a crash before this line leaves
-    # only unreachable orphan blocks.
-    to_write = manifest.unionByName(empties)
     if _extra_manifest is not None:
         to_write = to_write.unionByName(_extra_manifest)
+    to_write.coalesce(1).write.mode("append").parquet(mpath)
+    _pt.lap("manifest_write")
 
-    def _summary_agg(m):
-        return m.agg(
+    n_failed = sum(r[8] is not None for r in rows)  # error column
+    agg = (
+        len(rows) - n_failed, n_failed,
+        *(sum(r[i] for r in rows) for i in (4, 5, 3)),  # orig, enc, n_rows
+    )
+    if not fresh_run:
+        # a retried pinned run_id reports cumulatively for the run_id: the
+        # LATEST row per (pt, grp) within this run.  A replayed epoch
+        # re-encodes previously-failed groups and appends committed rows —
+        # the superseded failed rows must not keep counting (a streaming
+        # retry would loop forever on groups_failed > 0)
+        m = spark.read.parquet(mpath).filter(F.col("run_id") == run_id)
+        wlast = Window.partitionBy(pt_col, "grp").orderBy(F.col("committed_at").desc())
+        m = m.withColumn("_rn", F.row_number().over(wlast)).filter(F.col("_rn") == 1)
+        agg = m.agg(
             F.sum((F.col("status") == "committed").cast("long")),
             F.sum((F.col("status") == "failed").cast("long")),
             F.sum("orig_bytes"), F.sum("enc_bytes"), F.sum("n_rows"),
         ).collect()[0]
-
-    if fresh_run:
-        # this run's manifest rows are exactly manifest ∪ empties, each
-        # (pt, grp) once — aggregate those frames directly instead of
-        # re-reading mpath + a latest-row window (two jobs saved; the
-        # replay path below is only reachable for retried pinned run_ids).
-        # The agg runs BEFORE the append on purpose: manifest's plan reaches
-        # mpath through the resume anti-join, so appending first would
-        # invalidate the cache (recacheByPath) and the summary would
-        # recompute against a manifest that now contains this very run —
-        # every group "already committed", summary all zeros.
-        with _no_aqe(spark):
-            agg = _summary_agg(manifest.unionByName(empties))
-            # one manifest file per commit (Iceberg-style); without AQE's
-            # auto-coalesce the append would emit shuffle-partition-many
-            # tiny files.  coalesce, not repartition: the rows are bounded
-            # by the group universe, and the single post-exchange task is a
-            # metadata-sized write.
-            to_write.coalesce(1).write.mode("append").parquet(mpath)
-        _pt.lap("manifest_write")
-    else:
-        with _no_aqe(spark):
-            to_write.coalesce(1).write.mode("append").parquet(mpath)
-        _pt.lap("manifest_write")
-        m = spark.read.parquet(mpath).filter(F.col("run_id") == run_id)
-        # summary over the LATEST row per (pt, grp) within this run: a replayed
-        # epoch / retried pinned run_id re-encodes previously-failed groups and
-        # appends committed rows — the superseded failed rows must not keep
-        # counting (a streaming retry would loop forever on groups_failed > 0)
-        wlast = Window.partitionBy(pt_col, "grp").orderBy(F.col("committed_at").desc())
-        m = m.withColumn("_rn", F.row_number().over(wlast)).filter(F.col("_rn") == 1)
-        with _no_aqe(spark):
-            agg = _summary_agg(m)
-    manifest.unpersist()
     return {
         "run_id": run_id,
         "groups_total": n_total,

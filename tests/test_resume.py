@@ -4,10 +4,18 @@ case the north rule requires."""
 
 from __future__ import annotations
 
+import glob
+import os
+import uuid
+
 import pandas as pd
+import pyarrow.parquet as pq
+import pyspark.sql.functions as F
 import pytest
 
-from bids2table_spark.manifest import decode_job, encode_job, read_manifest
+from bids2table_spark.manifest import (
+    MANIFEST_DDL, decode_job, encode_job, load_salt_plan, read_manifest,
+)
 from bids2table_spark.synth import synth_transcripts
 
 KEY = ["conv_id", "turn_idx"]
@@ -709,3 +717,164 @@ def test_time_travel_pre_compaction_and_expiry(spark, tmp_path):
     pd.testing.assert_frame_equal(_sorted(full), _sorted(decode_job(spark, out)))
     with pytest.raises(RuntimeError, match="expired"):
         decode_job(spark, out, as_of="t2").count()
+
+
+# --- encode_job commit tail: Spark job budget, the exact manifest rows and
+# file schema it appends, resume next to other group prefixes, and crash
+# safety of the persisted salt plan.
+
+
+def _count_jobs(spark, fn):
+    """Run ``fn`` under its own job group; return (result, Spark job count)."""
+    sc = spark.sparkContext
+    group = f"b2t-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        res = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-end events reach the status store asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return res, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fresh_encode_job_budget(spark, tmp_path):
+    """A fresh encode runs at most 7 Spark jobs: salt plan 2, block write 2,
+    manifest tail 3 (one collected aggregate + one append)."""
+    df = synth_transcripts(spark, n_conv=120, seed=5, n_pt=2)
+    s, jobs = _count_jobs(
+        spark, lambda: encode_job(spark, df, str(tmp_path / "b"), run_id="j1",
+                                  target_group_rows=1024)
+    )
+    assert s["groups_encoded"] == s["groups_total"] > 1
+    assert jobs <= 7, f"fresh encode_job ran {jobs} Spark jobs"
+
+
+@pytest.fixture
+def failed_and_empty(spark):
+    """pt p0: one 600-turn conversation split into two salt buckets (one is
+    empty by pigeonhole); pt p1: two conversations, poisoned by the plan."""
+    t0 = pd.Timestamp("2024-01-01")
+    pdf = pd.DataFrame(
+        [("p0", "solo", i, "user", f"m{i}", None, t0 + pd.Timedelta(seconds=i))
+         for i in range(600)]
+        + [("p1", f"c{i // 100}", i % 100, "user", f"t{i}", None,
+            t0 + pd.Timedelta(seconds=i)) for i in range(200)],
+        columns=["pt", "conv_id", "turn_idx", "role", "text", "tool", "ts"],
+    )
+    return spark.createDataFrame(
+        pdf, "pt string, conv_id string, turn_idx int, role string, "
+             "text string, tool string, ts timestamp_ntz")
+
+
+def test_manifest_rows_and_file_schema(spark, failed_and_empty, tmp_path):
+    out = str(tmp_path / "fe")
+    s = encode_job(spark, failed_and_empty, out, run_id="fe1",
+                   plan={"p1/text": "no_such_codec"}, target_group_rows=300)
+    assert (s["groups_total"], s["groups_encoded"], s["groups_failed"]) == (3, 2, 1)
+    assert s["n_rows"] == 600
+    m = read_manifest(spark, out).toPandas().set_index(["pt", "grp"]).sort_index()
+    assert (m["run_id"] == "fe1").all()
+
+    data = m[m["n_blocks"] > 0]
+    assert len(data) == 1 and data.index[0][0] == "p0"
+    row = data.iloc[0]
+    assert (row["status"], row["n_rows"]) == ("committed", 600)
+    assert row["orig_bytes"] == s["orig_bytes"] and row["enc_bytes"] == s["enc_bytes"]
+    assert len(row["checksum"]) == 64 and pd.isna(row["error"])
+    assert row["codecs"].startswith('["conv_id:')
+
+    gap = m.loc["p0"][m.loc["p0"]["n_blocks"] == 0]
+    assert len(gap) == 1
+    g = gap.iloc[0]
+    assert g["status"] == "committed" and pd.isna(g["error"])
+    assert (g["n_rows"], g["orig_bytes"], g["enc_bytes"]) == (0, 0, 0)
+    assert (g["codecs"], g["checksum"]) == ("[]", "")
+
+    bad = m.loc["p1"]
+    assert len(bad) == 1
+    b = bad.iloc[0]
+    assert b["status"] == "failed" and b["n_blocks"] == 0 and b["n_rows"] == 0
+    assert "no_such_codec" in b["error"] and b["codecs"] == "[]"
+
+    # one manifest file per commit, with the MANIFEST_DDL types; run_id,
+    # status and committed_at are written NOT NULL, every other column
+    # nullable
+    files = glob.glob(os.path.join(out, "manifest", "*.parquet"))
+    assert len(files) == 1
+    want = spark.createDataFrame([], MANIFEST_DDL).schema
+    got = spark.read.parquet(files[0]).schema
+    assert [(f.name, f.dataType) for f in got] == [(f.name, f.dataType) for f in want]
+    nullable = {f.name: f.nullable for f in pq.read_schema(files[0])}
+    assert nullable == {
+        f.name: f.name not in ("run_id", "status", "committed_at") for f in want
+    }
+
+    # the retry re-encodes exactly the failed group; decode is the input
+    s2 = encode_job(spark, failed_and_empty, out, run_id="fe2", target_group_rows=300)
+    assert (s2["groups_encoded"], s2["groups_skipped"], s2["n_rows"]) == (1, 2, 200)
+    pd.testing.assert_frame_equal(_sorted(failed_and_empty), _sorted(decode_job(spark, out)))
+
+
+def test_resume_next_to_other_prefixes(spark, tmp_path):
+    """Resuming an interrupted epoch in a table that holds other epochs must
+    compare the input only against its own prefix's committed groups —
+    another epoch's groups have no rows in this input by design."""
+    out = str(tmp_path / "epochs")
+    a = _prefixed(spark, 41, "a")
+    b = _prefixed(spark, 42, "b")
+    encode_job(spark, a, out, run_id="e0", group_prefix="e0-", target_group_rows=256)
+    s1 = encode_job(spark, b, out, run_id="e1", group_prefix="e1-",
+                    target_group_rows=256, max_groups=1)
+    assert s1["groups_encoded"] == 1 < s1["groups_total"]
+    s2 = encode_job(spark, b, out, run_id="e1r", group_prefix="e1-",
+                    target_group_rows=256)
+    assert s2["groups_skipped"] == 1
+    assert s2["groups_encoded"] == s1["groups_total"] - 1
+    pd.testing.assert_frame_equal(
+        _sorted(a.unionByName(b)), _sorted(decode_job(spark, out))
+    )
+
+
+def test_truncated_salt_plan_part_keeps_labels(spark, tmp_path):
+    """A torn salt_plan part file is skipped on its own: the stored plan
+    still fixes the group labels, so a resume under a very different size
+    target neither regroups nor re-encodes committed groups."""
+    df = synth_transcripts(spark, n_conv=120, seed=7, n_pt=2)
+    out = str(tmp_path / "torn")
+    s1 = encode_job(spark, df, out, run_id="t1", target_group_rows=512, max_groups=2)
+    stored = load_salt_plan(spark, out)
+    assert sum(stored.values()) == s1["groups_total"] > 2
+    (part,) = glob.glob(os.path.join(out, "salt_plan", "part-*.parquet"))
+    with open(part, "rb") as fh:
+        blob = fh.read()
+    with open(os.path.join(out, "salt_plan", "part-torn.parquet"), "wb") as fh:
+        fh.write(blob[: len(blob) // 2])
+    assert load_salt_plan(spark, out) == stored
+    s2 = encode_job(spark, df, out, run_id="t2", target_group_rows=65536)
+    assert s2["groups_total"] == s1["groups_total"]
+    assert s2["groups_skipped"] == 2
+    pd.testing.assert_frame_equal(_sorted(df), _sorted(decode_job(spark, out)))
+
+
+def test_salt_plan_write_crash_leaves_no_part_file(spark, tmp_path, monkeypatch):
+    """A crash mid-write of the salt plan leaves no visible part file, so
+    the next run sees no plan rather than a torn one."""
+    import pyarrow.parquet
+
+    def torn_write(table, where, **kw):
+        with open(where, "wb") as fh:
+            fh.write(b"PAR1 torn")
+        raise OSError("disk full")
+
+    df = synth_transcripts(spark, n_conv=40, seed=9, n_pt=2)
+    out = str(tmp_path / "crash")
+    monkeypatch.setattr(pyarrow.parquet, "write_table", torn_write)
+    with pytest.raises(OSError, match="disk full"):
+        encode_job(spark, df, out, run_id="c1")
+    monkeypatch.undo()
+    assert glob.glob(os.path.join(out, "salt_plan", "part-*")) == []
+    assert load_salt_plan(spark, out) == {}
+    s = encode_job(spark, df, out, run_id="c2")
+    assert s["groups_encoded"] == s["groups_total"]
+    assert load_salt_plan(spark, out)
