@@ -25,12 +25,7 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 from bench import HEADLINE, warm_session  # noqa: E402  (frozen harness reused)
-
-
-def explain_str(df, mode: str = "formatted") -> str:
-    return df.sparkSession._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), mode
-    )
+from bids2table_spark.plans import plan_str  # noqa: E402
 
 
 def main() -> None:
@@ -71,7 +66,7 @@ def main() -> None:
             if args.explain and p == 0:
                 path = os.path.join(REPO, args.explain, f"{name}_{args.suffix}.txt")
                 with open(path, "w") as fh:
-                    fh.write(explain_str(df))
+                    fh.write(plan_str(df))
             spark.sparkContext.setJobDescription(None)
 
     out = {

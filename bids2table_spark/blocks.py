@@ -106,13 +106,13 @@ def zone_key_value(v, phys: str | None = None) -> str | None:
     """Order-preserving string image of a sort-key value.
 
     When ``phys`` (the key column's physical type) is given, the value is
-    coerced to that type FIRST — this is load-bearing on the pandas encode
-    path, where an int64 sort key with NULLs arrives as float64: without
-    coercion encode would store the 16-hex float image while decode (given
-    native-int ``key_range`` bounds) images 20-digit decimal, and the
+    coerced to that type FIRST, so a value of another python type (a
+    float64 7.0 for an int64 key, a string for a date key) images in the
+    key's own alphabet: without coercion the float would image as 16-hex
+    IEEE bits while the key's blocks carry 20-digit decimal, and the
     lexicographic compare between the two is meaningless (silently prunes
     matching blocks).  Without ``phys`` it dispatches on the runtime python
-    type (decode's ``key_range`` bounds arrive with the key's native type).
+    type.
     Integers/timestamps/dates map to zero-padded offset-binary decimal,
     floats to sign-flipped IEEE bits in hex, bytes to hex — all
     fixed-width, so string order == native order."""
@@ -277,36 +277,6 @@ def spark_field_phys(dt) -> str:
     )
 
 
-def _to_kernel(series: pd.Series, phys: str) -> tuple[np.ndarray | pd.Series, np.ndarray]:
-    """(valid_values_for_kernel, validity_mask). Timestamps -> epoch ns.
-
-    pandas-path variant kept for the (legacy) applyInPandas encoder and unit
-    tests; the hot path is :func:`_to_kernel_arrow`."""
-    mask = series.notna().to_numpy()
-    if phys in (PHYS_TS, PHYS_TS_NTZ):
-        vals = pd.to_datetime(series).astype("datetime64[ns]").astype(np.int64).to_numpy()
-        return vals[mask], mask
-    if phys in (PHYS_INT, PHYS_LONG, PHYS_BOOL):
-        v = series.to_numpy()
-        if v.dtype.kind in "fO":  # pandas promoted nullable ints/bools
-            vals = np.zeros(len(v), dtype=np.int64)
-            vals[mask] = np.asarray(v[mask], dtype=np.int64)
-            return vals[mask], mask
-        return v.astype(np.int64)[mask], mask
-    if phys == PHYS_DATE:
-        # numpy handles the ns->D downcast; pandas 2.x Series.astype rejects
-        # non-{s,ms,us,ns} datetime units
-        v = pd.to_datetime(series).to_numpy(dtype="datetime64[ns]")
-        days = v.astype("datetime64[D]").astype(np.int64)
-        return days[mask], mask
-    if phys == PHYS_DOUBLE:
-        return series.to_numpy(dtype=np.float64)[mask], mask
-    if phys == PHYS_FLOAT:
-        return series.to_numpy(dtype=np.float32)[mask], mask
-    # strings / binary
-    return series[mask], mask
-
-
 def _update_values_hash(h, values, phys: str) -> None:
     if phys in (PHYS_STRING, PHYS_BIN):
         offsets, buf = strings_to_buf(values)
@@ -325,11 +295,12 @@ def _canonical_bytes(values, mask: np.ndarray, phys: str) -> str:
 
 
 def _to_kernel_arrow(arr: pa.Array, phys: str):
-    """Arrow-native variant of :func:`_to_kernel` — no pandas object boxing.
+    """(valid_values_for_kernel, validity_mask) of one Arrow column — the
+    one conversion the encoder, the local selector and the stats pass share.
 
-    Returns (valid_values_for_kernel, validity_mask).  Timestamps normalize
-    to epoch ns regardless of the arrow unit so checksums agree with the
-    pandas path."""
+    Timestamps normalize to epoch ns regardless of the arrow unit, so
+    checksums do not depend on the unit a batch arrives in; dates become
+    int64 days; strings/binary stay Arrow arrays."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     n = len(arr)

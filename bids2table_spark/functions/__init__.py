@@ -5,7 +5,7 @@ re-expressed as Catalyst expressions)."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, Window, functions as F
+from pyspark.sql import Column, functions as F
 
 
 _SIZE_UNITS = {
@@ -49,49 +49,6 @@ def format_size(n: int | float, binary: bool = True) -> str:
             return f"{v:.0f} {u}" if u == "B" else f"{v:.2f} {u}"
         v /= step
     return f"{v:.2f} {units[-1]}"
-
-
-def regexp_entity(col, pattern: str, cast: str | None = None) -> Column:
-    """P2 regex entity extraction with typed cast; '' (no match) -> null."""
-    out = F.nullif(F.regexp_extract(col, pattern, 1), F.lit(""))
-    return out.cast(cast) if cast else out
-
-
-def posix_path(col) -> Column:
-    """F1 posix path normalization (utils.py:163-181)."""
-    return F.regexp_replace(col, r"\\+", "/")
-
-
-def zero_pad(col, width: int = 4) -> Column:
-    """F4 zero-padded id formatting (logging.py:245-249)."""
-    return F.format_string(f"%0{width}d", col)
-
-
-def run_id_over(value_col: str, order_cols: list[str], partition_cols: list[str] | None = None) -> Column:
-    """C2-as-SQL: monotone run id for RLE-style analysis via lag + running sum."""
-    w = Window.orderBy(*order_cols)
-    if partition_cols:
-        w = Window.partitionBy(*partition_cols).orderBy(*order_cols)
-    is_start = (
-        F.when(
-            F.lag(value_col).over(w).isNull()
-            | (F.lag(value_col).over(w) != F.col(value_col)),
-            1,
-        ).otherwise(0)
-    )
-    return F.sum(is_start).over(w.rowsBetween(Window.unboundedPreceding, 0))
-
-
-def delta_over(col: str, order_cols: list[str], partition_cols: list[str]) -> Column:
-    """C4-as-SQL: value minus its predecessor under the canonical order."""
-    w = Window.partitionBy(*partition_cols).orderBy(*order_cols)
-    return F.col(col) - F.lag(col).over(w)
-
-
-def null_fraction(cols: list[str]) -> Column:
-    """P6 overlap metric: fraction of non-null fields among ``cols``."""
-    nn = sum(F.when(F.col(c).isNotNull(), 1).otherwise(0) for c in cols)
-    return nn / F.lit(float(len(cols)))
 
 
 def pack_ndarray(col, ndim: int = 2) -> Column:

@@ -113,7 +113,8 @@ def _save_colmeta(
     string metadata through concat/prefix, bids2table/schema.py:277-284; the
     Spark-native channel is StructField.metadata).  Driver-side JSON sidecar —
     tiny, written once per out_dir; object-store paths go through the Hadoop
-    FS API (same destination as the blocks), local paths write directly.
+    FS API (same destination as the blocks), local paths are written under a
+    temp name and ``os.replace``d into place.
 
     ``keyinfo`` (stored under the reserved ``__keyinfo__`` name, never a
     valid column) records the sort-key column + phys type and the caller's
@@ -178,9 +179,18 @@ def _save_colmeta(
     if "://" in p:
         _fs_write_text(spark, _colmeta_path(out_dir), text)
         return
-    os.makedirs(os.path.dirname(p), exist_ok=True)
-    with open(p, "w") as fh:
-        fh.write(text)
+    # write a hidden temp file and rename it into place: a crash mid-write
+    # leaves the previous sidecar whole, never a truncated one
+    d = os.path.dirname(p)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".colmeta.json.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "w") as fh:
+            fh.write(text)
+        os.replace(tmp, p)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 def _load_colmeta(out_dir: str, spark: SparkSession | None = None) -> dict[str, dict]:

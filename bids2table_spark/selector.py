@@ -4,11 +4,16 @@ Two tiers (north rule: "per-partition cost-model auto-selector that samples
 column statistics (NDV, run length, byte entropy)"):
 
 * :func:`build_plan` — consumes the per-(pt, column) stats frame produced by
-  :mod:`stats` (one Arrow-vectorized sampling pass over the table) and emits
+  :mod:`stats` (one Arrow sampling pass over the table) and emits
   ``{"pt/column": codec}``, the plan shipped to every encode task.
 * :func:`choose_codec_local` — fallback used inside the encode UDF for
   columns/partitions missing from the plan; same cost model computed on the
   block itself (data is already in memory there, so the estimates are exact).
+
+Both tiers see Arrow values converted by the encoder's own
+``blocks._to_kernel_arrow`` and take their int and string statistics from
+one extractor per type (:func:`int_stats`, :func:`str_stats`).  Each tier
+keeps its own NDV rule, entropy window and float sampling stride.
 
 Estimates are bytes-per-block approximations of each kernel's layout — they
 only need to rank codecs correctly, not predict exact sizes.
@@ -20,33 +25,54 @@ import numpy as np
 import pandas as pd
 
 from .codecs.base import strings_to_buf
-from .codecs.bitpack import bit_width, gcd_deltas, zigzag
+from .codecs.bitpack import bit_width, gcd_deltas, patched_cost, zigzag
+
+# --------------------------------------------------------------------------
+# Shared stat extractors — stats._col_partial (global tier, per sampled
+# chunk) and the local estimators (per block) both call these.
 
 
-def _int_stats(vals: np.ndarray) -> dict:
-    from .codecs.bitpack import patched_cost
-
-    n = len(vals)
-    if n == 0:
-        return {"n": 0}
-    vmin, vmax = int(vals.min()), int(vals.max())
-    w_for = bit_width(vmax - vmin)  # python ints: exact for any int64 range
+def int_stats(vals: np.ndarray) -> dict:
+    """Int statistics BOTH selector tiers take from non-empty int64 kernel
+    values (stats._col_partial per sampled chunk, estimate_int_sizes per
+    block): min/max, patch-aware FOR and delta payload bytes, delta width
+    and runs.  Keys are named as in stats.PARTIAL_DDL."""
+    vmin = int(vals.min())
     # patch-aware: rare outliers (conversation-boundary deltas, stray ids)
     # become exceptions in the kernels, so the estimates must not let a
-    # single wide value inflate the whole column's width
-    # same rebase encode_i64 performs (wraparound-safe signed distance)
-    for_pb = patched_cost(
-        vals.view(np.uint64) - np.int64(vmin).view(np.uint64) if n else vals
-    )
-    if n > 1:
+    # single wide value inflate the whole column's width; the rebase is the
+    # one encode_i64 performs (wraparound-safe signed distance)
+    s = {
+        "vmin": vmin, "vmax": int(vals.max()), "runs": 1, "w_delta": 0,
+        "for_pbytes": patched_cost(vals.view(np.uint64) - np.int64(vmin).view(np.uint64)),
+        "delta_pbytes": 0.0,
+    }
+    if len(vals) > 1:
         dd, _ = gcd_deltas(vals)
-        delta_pb = patched_cost(zigzag(dd))
-        runs = int((vals[1:] != vals[:-1]).sum()) + 1
-    else:
-        delta_pb, runs = 0.0, 1
-    ndv = len(np.unique(vals)) if n <= 65536 else min(n, len(np.unique(vals[:: max(1, n // 65536)])) * 4)
-    return {"n": n, "w_for": w_for, "for_pb": for_pb, "delta_pb": delta_pb,
-            "runs": runs, "ndv": ndv}
+        zz = zigzag(dd)
+        s["w_delta"] = bit_width(int(zz.max()))
+        s["delta_pbytes"] = patched_cost(zz)
+        s["runs"] = int((vals[1:] != vals[:-1]).sum()) + 1
+    return s
+
+
+def str_stats(arr) -> tuple:
+    """String/binary statistics BOTH selector tiers take from a non-empty,
+    null-free Arrow array: ``(dictionary, runs, buf)`` — the distinct values,
+    the run count, and the concatenated value bytes."""
+    import pyarrow as pa
+
+    big = (
+        pa.large_binary()
+        if pa.types.is_binary(arr.type) or pa.types.is_large_binary(arr.type)
+        else pa.large_string()
+    )
+    arr = arr.cast(big)
+    d = arr.dictionary_encode()
+    codes = d.indices.to_numpy(zero_copy_only=False)
+    runs = int((codes[1:] != codes[:-1]).sum()) + 1 if len(codes) > 1 else 1
+    _, buf = strings_to_buf(arr)
+    return d.dictionary, runs, buf
 
 
 # --------------------------------------------------------------------------
@@ -117,13 +143,17 @@ def pick(est: dict[str, float]) -> str:
 
 
 def estimate_int_sizes(vals: np.ndarray) -> dict[str, float]:
-    s = _int_stats(np.ascontiguousarray(vals, dtype=np.int64))
-    n = s["n"]
+    vals = np.ascontiguousarray(vals, dtype=np.int64)
+    n = len(vals)
     if n == 0:
         return {"forbp": 0.0}
+    s = int_stats(vals)
+    # the block is in memory: exact NDV up to 64k values, a strided
+    # sample scaled by 4 beyond
+    ndv = len(np.unique(vals)) if n <= 65536 else min(n, len(np.unique(vals[:: max(1, n // 65536)])) * 4)
     return int_cost_model(
-        n, s["w_for"], s["runs"], s["ndv"],
-        for_pbytes=s["for_pb"], delta_pbytes=s["delta_pb"],
+        n, bit_width(s["vmax"] - s["vmin"]), s["runs"], ndv,
+        for_pbytes=s["for_pbytes"], delta_pbytes=s["delta_pbytes"],
     )
 
 
@@ -164,89 +194,49 @@ def byte_entropy(buf: np.ndarray) -> float:
     return float(-(p * np.log2(p)).sum())
 
 
-def estimate_str_sizes(series) -> dict[str, float]:
+def _as_arrow(series):
+    """A pandas Series (public API callers) converted once to Arrow; Arrow
+    input passes through, chunked arrays combined."""
     import pyarrow as pa
 
-    if isinstance(series, pa.ChunkedArray):
-        series = series.combine_chunks()
-    if isinstance(series, pa.Array):
-        arr = series.drop_null() if series.null_count else series
-        n = len(arr)
-        if n == 0:
-            return {"plain": 0.0}
-    else:
-        vals = series.dropna()
-        n = len(vals)
-        if n == 0:
-            return {"plain": 0.0}
-        arr = pa.Array.from_pandas(vals)
-    big = (
-        pa.large_binary()
-        if pa.types.is_binary(arr.type) or pa.types.is_large_binary(arr.type)
-        else pa.large_string()
-    )
-    arr = arr.cast(big)
-    d = arr.dictionary_encode()
-    ndv = len(d.dictionary)
-    codes = d.indices.to_numpy(zero_copy_only=False)
-    runs = int((codes[1:] != codes[:-1]).sum()) + 1 if n > 1 else 1
-    offsets, buf = strings_to_buf(arr)
-    total = float(len(buf))
+    if not isinstance(series, (pa.Array, pa.ChunkedArray)):
+        series = pa.Array.from_pandas(series)
+    return series.combine_chunks() if isinstance(series, pa.ChunkedArray) else series
+
+
+def estimate_str_sizes(series) -> dict[str, float]:
+    arr = _as_arrow(series)
+    arr = arr.drop_null() if arr.null_count else arr
+    n = len(arr)
+    if n == 0:
+        return {"plain": 0.0}
+    dictionary, runs, buf = str_stats(arr)
     ent = byte_entropy(np.frombuffer(buf[:65536], dtype=np.uint8))
-    return str_cost_model(n, ndv, runs, total, entropy_fsst_ratio(ent))
+    return str_cost_model(n, len(dictionary), runs, float(len(buf)), entropy_fsst_ratio(ent))
 
 
 def choose_codec_local(series, phys: str) -> str:
     """Cost-model pick for one block (exact stats, data already in memory).
-    Accepts a pandas Series or a pyarrow Array.  For list<T> columns the
-    choice is made on the flattened child values (the codec names the CHILD
-    kernel; offsets are always delta-packed)."""
-    import pyarrow as pa
+    Accepts a pyarrow Array or a pandas Series.  Values reach the estimators
+    through the encoder's own conversion (blocks._to_kernel_arrow).  For
+    list<T> columns the choice is made on the flattened child values (the
+    codec names the CHILD kernel; offsets are always delta-packed)."""
+    from .blocks import _to_kernel_arrow, is_list_phys, list_child_phys
 
-    from .blocks import is_list_phys, list_child_phys
-
+    arr = _as_arrow(series)
     if is_list_phys(phys):
         import pyarrow.compute as pc
 
-        arr = series if isinstance(series, (pa.Array, pa.ChunkedArray)) else pa.Array.from_pandas(series)
-        if isinstance(arr, pa.ChunkedArray):
-            arr = arr.combine_chunks()
         flat = pc.list_flatten(arr.drop_null() if arr.null_count else arr)
         return choose_codec_local(flat, list_child_phys(phys))
     if phys in ("int", "long", "timestamp", "timestamp_ntz", "boolean", "date"):
-        if isinstance(series, (pa.Array, pa.ChunkedArray)):
-            from .blocks import _to_kernel_arrow
-
-            vals, _ = _to_kernel_arrow(series, phys)
-        elif phys in ("boolean", "date"):
-            from .blocks import _to_kernel
-
-            vals, _ = _to_kernel(series, phys)
-        else:
-            v = series.dropna()
-            if phys.startswith("timestamp"):
-                vals = pd.to_datetime(v).astype("datetime64[ns]").astype(np.int64).to_numpy()
-            else:
-                vals = v.to_numpy(dtype=np.int64, na_value=0) if v.dtype.kind == "f" else v.to_numpy().astype(np.int64)
-        est = estimate_int_sizes(vals)
+        est = estimate_int_sizes(_to_kernel_arrow(arr, phys)[0])
     elif phys in ("string", "binary"):
-        est = estimate_str_sizes(series)
+        est = estimate_str_sizes(arr)
     elif phys == "double":
-        if isinstance(series, (pa.Array, pa.ChunkedArray)):
-            from .blocks import _to_kernel_arrow
-
-            vals, _ = _to_kernel_arrow(series, phys)
-        else:
-            vals = series.dropna().to_numpy(dtype=np.float64)
-        est = estimate_f64_sizes(vals)
+        est = estimate_f64_sizes(_to_kernel_arrow(arr, phys)[0])
     elif phys == "float":
-        if isinstance(series, (pa.Array, pa.ChunkedArray)):
-            from .blocks import _to_kernel_arrow
-
-            vals, _ = _to_kernel_arrow(series, phys)
-        else:
-            vals = series.dropna().to_numpy(dtype=np.float32)
-        est = estimate_f32_sizes(vals)
+        est = estimate_f32_sizes(_to_kernel_arrow(arr, phys)[0])
     else:
         return "plain"
     return pick(est)

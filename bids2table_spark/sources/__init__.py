@@ -1,16 +1,15 @@
 """Catalog seam: where encoded blocks + manifests live.
 
 The north rule targets Iceberg tables; this sandbox has no Iceberg runtime
-jar, so the default catalog is a path-based layout with the same semantics
-(atomic per-run visibility via the manifest join — see manifest.py).  The
+jar, so the default catalog is a path-based layout (``blocks/`` +
+``manifest/`` under the out_dir) with the same semantics (atomic per-run
+visibility via the manifest join — see manifest.py).  The
 seam keeps the swap trivial: an IcebergCatalog reads/writes
 ``catalog.db.table`` instead of paths and relies on snapshot commits instead
 of the manifest run_id join.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -28,30 +27,6 @@ def iceberg_available(spark: SparkSession) -> bool:
         return True
     except Exception:
         return False
-
-
-@dataclass
-class PathCatalog:
-    """Parquet-dir-backed table layout (blocks/ + manifest/ under root)."""
-
-    root: str
-
-    @property
-    def blocks_path(self) -> str:
-        return f"{self.root.rstrip('/')}/blocks"
-
-    @property
-    def manifest_path(self) -> str:
-        return f"{self.root.rstrip('/')}/manifest"
-
-    def read_blocks(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.blocks_path)
-
-    def read_manifest(self, spark: SparkSession) -> DataFrame | None:
-        try:
-            return spark.read.parquet(self.manifest_path)
-        except Exception:
-            return None
 
 
 def read_table(spark: SparkSession, ref: str) -> DataFrame:

@@ -1,18 +1,19 @@
 """Column-statistics sampling pass feeding the codec selector.
 
-Round-2 scale shape: the sampling UDF runs per ``(pt, salt)`` chunk — not
-one giant task per partition — so its parallelism scales with the cluster
-and no single task ever has to hold a partition's whole sample (round-1
-capped parallelism at n_pt and OOM'd by construction at 100x).  Each chunk
-emits *mergeable* partials: counts, run counts, min/max frames, byte
-HISTOGRAMS (entropy is computed from the summed histogram — exactly, since
-entropy is a function of the distribution), delta widths, sampled FSST
-ratios, ALP hit rates.  NDV — the one stat that does not merge — comes from
-a separate single JVM aggregation using ``approx_count_distinct`` (HLL
-sketches merge natively inside Spark).
+The sample is split into ``defaultParallelism`` chunks by a hash of the
+conversation key, so its parallelism scales with the cluster and no single
+task holds a partition's whole sample.  Each chunk arrives as a
+``pa.Table`` (``applyInArrow``) and its columns reach the statistics as the
+kernel-domain values the encoder sees (``blocks._to_kernel_arrow``).  Each
+chunk emits *mergeable* partials per (pt, column): counts, run counts,
+min/max frames, byte HISTOGRAMS (entropy is computed from the summed
+histogram — exactly, since entropy is a function of the distribution),
+delta widths, sampled FSST ratios, ALP hit rates and a KMV distinct sketch
+for NDV.
 
-The merge itself runs driver-side in pandas over n_pt x n_salts x n_cols
-tiny rows, then feeds :func:`bids2table_spark.selector.build_plan`.
+The merge (:func:`merge_partials`) runs driver-side in pandas over
+n_pt x n_chunks x n_cols tiny rows, then feeds
+:func:`bids2table_spark.selector.build_plan`.
 
 Everything the north rule names (NDV, run length, byte entropy) is here,
 Arrow-vectorized, never per-row Python.
@@ -22,10 +23,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from .blocks import spark_field_phys
-from .codecs.base import strings_to_buf
-from .codecs.bitpack import bit_width, gcd_deltas, patched_cost, zigzag
+from .codecs.bitpack import bit_width
 from .codecs import fsst as fsst_mod
 
 PARTIAL_DDL = (
@@ -95,117 +97,85 @@ def _stats_phys_ok(phys: str) -> bool:
 
 _INT_PHYS = ("int", "long", "timestamp", "timestamp_ntz", "boolean", "date")
 
+# PARTIAL_DDL type names -> the Arrow types applyInArrow must return
+_DDL_ARROW = {
+    "string": pa.string(), "int": pa.int32(), "long": pa.int64(),
+    "double": pa.float64(), "binary": pa.binary(),
+}
+
 
 def _col_partial(
-    pt: str, salt: int, name: str, phys: str, series: pd.Series,
-    trial: bool | None = None,
+    pt: str, salt: int, name: str, phys: str, arr: pa.Array, trial: bool,
 ) -> dict:
-    """``trial``: run the (expensive) FSST actual-compression trial in this
-    chunk.  Default (None) keeps the historical rule — salt 0 carries the
-    trial — used by the explicit ``salts_per_pt`` path and unit tests; the
-    global-chunk path spreads trials across chunks by a per-pt hash so no
-    single task pays every pt's trial."""
-    from .blocks import is_list_phys, list_child_phys
+    """Partial stats of one column of one (pt, chunk), over the values
+    ``blocks._to_kernel_arrow`` hands the encode kernels (float NaN is a
+    value there, as it is to the kernels).  ``trial``: run the (expensive)
+    FSST actual-compression trial in this chunk."""
+    from .blocks import _to_kernel_arrow, is_list_phys, list_child_phys
+    from .selector import int_stats, str_stats
 
-    if trial is None:
-        trial = salt == 0
     if is_list_phys(phys):
         # list<T>: partials over the flattened child values (the same view
         # the list kernel encodes and choose_codec_local ranks on); the row
         # keeps the declared list phys — build_plan strips it to pick the
         # child branch, and the plan codec names the child kernel
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        arr = pa.Array.from_pandas(series)
-        if pa.types.is_null(arr.type):  # chunk where every list is NULL
-            flat = pa.array([], type=pa.null())
-        else:
-            flat = pc.list_flatten(arr.drop_null() if arr.null_count else arr)
-        out = _col_partial(pt, salt, name, list_child_phys(phys), flat.to_pandas(), trial=trial)
+        flat = pc.list_flatten(arr.drop_null() if arr.null_count else arr)
+        out = _col_partial(pt, salt, name, list_child_phys(phys), flat, trial)
         out["phys"] = phys
         return out
     out = {
-        "pt": pt, "salt": salt, "column": name, "phys": phys, "n": len(series),
+        "pt": pt, "salt": salt, "column": name, "phys": phys, "n": len(arr),
         "ndv": 0, "runs": 0, "vmin": 0, "vmax": 0, "w_delta": 0,
         "total_bytes": 0, "hist": b"", "fsst_sample_ratio": 0.0,
         "alp_hit": 0.0, "w_alp": 0, "for_pbytes": 0.0, "delta_pbytes": 0.0,
         "kmv": b"",
     }
-    valid = series.dropna()
-    if len(valid) == 0:
+    vals, _ = _to_kernel_arrow(arr, phys)
+    if len(vals) == 0:
         return out
     if phys in _INT_PHYS:
-        from .blocks import _to_kernel
-
-        vals, _ = _to_kernel(valid, phys)
-        vals = np.asarray(vals, dtype=np.int64)
         out["ndv"] = int(pd.unique(vals).size)
         out["kmv"] = _kmv_sketch(vals)
-        out["vmin"], out["vmax"] = int(vals.min()), int(vals.max())
-        # patch-aware byte estimates (mergeable: they are per-chunk payload
-        # byte sums, summed in merged_stats) — the chunk-local rebase matches
-        # what the per-block kernels actually see, so rare outliers
+        # patch-aware byte estimates are per-chunk payload byte sums (summed
+        # in merge_partials) — the chunk-local rebase matches what the
+        # per-block kernels actually see, so rare outliers
         # (conversation-boundary resets) cost exceptions, not global width
-        out["for_pbytes"] = patched_cost(
-            vals.view(np.uint64) - np.int64(out["vmin"]).view(np.uint64)
-        )
-        if len(vals) > 1:
-            dd, _ = gcd_deltas(vals)
-            zz = zigzag(dd)
-            out["w_delta"] = bit_width(int(zz.max()))
-            out["delta_pbytes"] = patched_cost(zz)
-            out["runs"] = int((vals[1:] != vals[:-1]).sum()) + 1
-        else:
-            out["runs"] = 1
+        out.update(int_stats(vals))
         out["total_bytes"] = 8 * len(vals)
     elif phys in ("string", "binary"):
-        import pyarrow as pa
-
-        arr = pa.Array.from_pandas(valid)
-        big = (
-            pa.large_binary()
-            if pa.types.is_binary(arr.type) or pa.types.is_large_binary(arr.type)
-            else pa.large_string()
-        )
-        arr = arr.cast(big)
-        d = arr.dictionary_encode()
-        codes = d.indices.to_numpy(zero_copy_only=False)
-        out["ndv"] = len(d.dictionary)
+        dictionary, runs, buf = str_stats(vals)
         # hash only the chunk's DISTINCT values (the dictionary) — same
         # sketch, ndv-not-n hashing cost
-        out["kmv"] = _kmv_sketch(d.dictionary.to_pandas())
-        out["runs"] = int((codes[1:] != codes[:-1]).sum()) + 1 if len(codes) > 1 else 1
-        offsets, buf = strings_to_buf(arr)
-        out["total_bytes"] = int(len(buf))
+        out.update(
+            ndv=len(dictionary), runs=runs, total_bytes=len(buf),
+            kmv=_kmv_sketch(dictionary.to_pandas()),
+        )
         sample = np.frombuffer(buf[:_FSST_SAMPLE_BYTES], dtype=np.uint8)
         out["hist"] = np.bincount(sample, minlength=256).astype(np.int64).tobytes()
         # the actual-compression FSST trial is the expensive stat — run it in
-        # ONE chunk per pt (salt 0); histograms/counts still come from every
-        # chunk, and the merge weights the ratio by bytes so missing chunks
-        # simply don't contribute
+        # ONE chunk per pt; histograms/counts still come from every chunk,
+        # and the merge weights the ratio by bytes so missing chunks simply
+        # don't contribute
         if trial and len(sample) >= 1024:
-            trial = sample[:_FSST_TRIAL_BYTES]
-            table = fsst_mod._Table(fsst_mod.build_table(trial))
-            stream = fsst_mod.compress(trial, table)
-            out["fsst_sample_ratio"] = float(len(stream) + 8 * len(table.symbols)) / len(trial)
+            head = sample[:_FSST_TRIAL_BYTES]
+            table = fsst_mod._Table(fsst_mod.build_table(head))
+            stream = fsst_mod.compress(head, table)
+            out["fsst_sample_ratio"] = float(len(stream) + 8 * len(table.symbols)) / len(head)
     else:  # double / float
-        out["ndv"] = int(pd.unique(valid).size)
-        out["total_bytes"] = (8 if phys == "double" else 4) * len(valid)
+        out["ndv"] = int(pd.unique(vals).size)
+        out["total_bytes"] = (8 if phys == "double" else 4) * len(vals)
         if phys == "double":
             from .codecs.alp import _exact_mask, choose_exponent
 
-            vals = valid.to_numpy(dtype=np.float64)
             e, hit = choose_exponent(vals)
             _, enc = _exact_mask(vals[:: max(1, len(vals) // 4096)], e)
         else:
             from .codecs.alp import _exact_mask_f32, choose_exponent_f32
 
-            vals = valid.to_numpy(dtype=np.float32)
             e, hit = choose_exponent_f32(vals)
             _, enc = _exact_mask_f32(vals[:: max(1, len(vals) // 4096)], e)
         out["alp_hit"] = float(hit)
-        out["kmv"] = _kmv_sketch(valid)
+        out["kmv"] = _kmv_sketch(vals)
         if len(enc):
             out["w_alp"] = bit_width(int(enc.max()) - int(enc.min()))
     return out
@@ -226,8 +196,6 @@ def sample_stats(
     sort_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     fraction: float = 0.05,
     seed: int = 7,
-    salts_per_pt: int | None = None,
-    pre_sampled=None,
 ):
     """Mergeable per-(pt, salt, column) partial stats from a seeded sample.
 
@@ -236,52 +204,18 @@ def sample_stats(
     the runs/delta structure the encode groups will actually see; chunk
     boundaries only ever split *between* conversations.
 
-    Default chunking is GLOBAL (round 6): one salt space of
-    ``defaultParallelism`` chunks shared by every pt, with each chunk
-    splitting by pt *inside* the pandas function.  The old per-pt salting
-    (``salts_per_pt``, kept for explicit callers/tests) produced
-    n_pt x salts chunks, and the ~15 ms applyInPandas per-chunk cost
-    (arrow<->pandas conversion + per-group dispatch) dominated the pass:
-    128 chunks cost 2.2 s where 32 cost 1.2 s at identical output.  The
-    per-pt FSST trial spreads over chunks by a per-pt hash so no single
-    task pays every pt's trial.  Partials are identical in distribution
-    (conversations still land whole, runs/delta structure preserved);
-    only the salt labels differ, and the merge is salt-agnostic.
-
-    ``pre_sampled``: an already flattened+sampled frame to reuse (lets
-    merged_stats materialize ONE sample shared by both stats jobs instead
-    of two independent full-input sampling scans)."""
+    Chunking is GLOBAL: one salt space of ``defaultParallelism`` chunks
+    shared by every pt, with each chunk splitting by pt inside the Arrow
+    function (per-pt salting made n_pt x salts chunks, and the per-chunk
+    UDF cost dominated the pass: 128 chunks cost 2.2 s where 32 cost 1.2 s
+    at identical output).  The per-pt FSST trial spreads over chunks by a
+    per-pt hash so no single task pays every pt's trial."""
     from pyspark.sql import functions as F
 
     from .encode import flatten_struct_columns
 
-    if pre_sampled is not None:
-        df = pre_sampled
-    else:
-        df = flatten_struct_columns(df).sample(
-            fraction=min(1.0, fraction), seed=seed
-        )
+    df = flatten_struct_columns(df).sample(fraction=min(1.0, fraction), seed=seed)
     fields = _stats_fields(df, pt_col)
-    if salts_per_pt is not None:
-        sampled = df.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(sort_cols[0])), F.lit(salts_per_pt)).cast("int")
-        )
-
-        def per_chunk(key, pdf):
-            from .blocks import pin_worker_threads
-
-            pin_worker_threads()
-            pt, salt = str(key[0]), int(key[1])
-            pdf = pdf.sort_values(list(sort_cols), kind="mergesort", ignore_index=True)
-            return pd.DataFrame(
-                [_col_partial(pt, salt, name, phys, pdf[name]) for name, phys in fields]
-            )
-
-        sampled = sampled.repartition(
-            max(2, df.sparkSession.sparkContext.defaultParallelism), pt_col, "_salt"
-        )
-        return sampled.groupBy(pt_col, "_salt").applyInPandas(per_chunk, PARTIAL_DDL)
-
     n_chunks = max(2, df.sparkSession.sparkContext.defaultParallelism)
     sampled = df.withColumn(
         "_salt", F.pmod(F.xxhash64(F.col(sort_cols[0])), F.lit(n_chunks)).cast("int")
@@ -291,17 +225,24 @@ def sample_stats(
     # the python stage to ONE task — every chunk's numpy work serialized in
     # a single worker (measured round 6; same fix as encode/decode)
     sampled = sampled.repartition(n_chunks, "_salt")
+    schema = pa.schema(
+        [(f.split()[0], _DDL_ARROW[f.split()[1]]) for f in PARTIAL_DDL.split(", ")]
+    )
 
-    def per_chunk_global(key, pdf):
+    def per_chunk(key, tbl):
         import hashlib
 
         from .blocks import pin_worker_threads
 
         pin_worker_threads()
-        salt = int(key[0])
-        rows = []
-        for pt, sub in pdf.groupby(pt_col, sort=False):
-            sub = sub.sort_values(list(sort_cols), kind="mergesort", ignore_index=True)
+        salt = key[0].as_py()
+        tbl = tbl.sort_by([(c, "ascending") for c in (pt_col, *sort_cols)])
+        pts = pc.run_end_encode(tbl.column(pt_col).combine_chunks())
+        rows, lo = [], 0
+        for pt, hi in zip(pts.values.to_pylist(), pts.run_ends.to_pylist()):
+            sub, lo = tbl.slice(lo, hi - lo), hi
+            if pt is None:  # rows without a pt get no plan key
+                continue
             # exactly one chunk per pt runs the FSST trial (deterministic
             # per-pt hash — the trial chunk is stable across runs)
             trial = (
@@ -309,14 +250,12 @@ def sample_stats(
                 == salt
             )
             rows.extend(
-                _col_partial(str(pt), salt, name, phys, sub[name], trial=trial)
+                _col_partial(str(pt), salt, name, phys, sub.column(name).combine_chunks(), trial)
                 for name, phys in fields
             )
-        if not rows:  # a salt with zero sampled rows: typed empty frame
-            return pd.DataFrame(columns=[c.split()[0] for c in PARTIAL_DDL.split(", ")])
-        return pd.DataFrame(rows)
+        return pa.Table.from_pylist(rows, schema=schema)
 
-    return sampled.groupBy("_salt").applyInPandas(per_chunk_global, PARTIAL_DDL)
+    return sampled.groupBy("_salt").applyInArrow(per_chunk, PARTIAL_DDL)
 
 
 def _entropy_from_hist(counts: np.ndarray) -> float:
@@ -327,27 +266,10 @@ def _entropy_from_hist(counts: np.ndarray) -> float:
     return float(-(p * np.log2(p)).sum())
 
 
-def merged_stats(
-    df,
-    pt_col: str = "pt",
-    sort_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-    fraction: float = 0.05,
-    seed: int = 7,
-    salts_per_pt: int | None = None,
-) -> pd.DataFrame:
-    """Partial pass -> driver-side merge -> the per-(pt, column) stats frame
-    ``selector.build_plan`` consumes.
-
-    ONE Spark job: every stat merges, including NDV — each chunk carries a
-    KMV distinct sketch (k smallest value hashes), sketches union in the
-    driver-side merge, and the estimate is (K-1)/kth_min.  (Rounds 2-3 ran
-    a separate ``approx_count_distinct`` aggregation over a materialized
-    shared sample: 3 jobs where 1 suffices, and a cache the cluster had to
-    hold.)"""
-    partial = sample_stats(
-        df, pt_col=pt_col, sort_cols=sort_cols, fraction=fraction, seed=seed,
-        salts_per_pt=salts_per_pt,
-    ).toPandas()
+def merge_partials(partial: pd.DataFrame) -> pd.DataFrame:
+    """Driver-side merge of :func:`sample_stats` partials into the
+    per-(pt, column) stats frame ``selector.build_plan`` consumes."""
+    from .blocks import is_list_phys, list_child_phys
 
     rows = []
     for (pt, col), g in partial.groupby(["pt", "column"], sort=True):
@@ -360,8 +282,6 @@ def merged_stats(
         w_fsst = float((g["fsst_sample_ratio"].to_numpy() * tb).sum() / tb.sum()) if tb.sum() else 0.0
         nn = g["n"].to_numpy(dtype=np.float64)
         w_alp_hit = float((g["alp_hit"].to_numpy() * nn).sum() / nn.sum()) if nn.sum() else 0.0
-        from .blocks import is_list_phys, list_child_phys
-
         base_phys = list_child_phys(phys) if is_list_phys(phys) else phys
         nonzero = g[g["n"] > 0]
         w_for = 0
@@ -387,6 +307,27 @@ def merged_stats(
             }
         )
     return pd.DataFrame(rows, columns=STATS_COLUMNS)
+
+
+def merged_stats(
+    df,
+    pt_col: str = "pt",
+    sort_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
+    fraction: float = 0.05,
+    seed: int = 7,
+) -> pd.DataFrame:
+    """Partial pass -> driver-side merge -> the per-(pt, column) stats frame
+    ``selector.build_plan`` consumes.
+
+    ONE pass over the sample (one Spark job; AQE runs its shuffle map stage
+    as a second): every stat merges, including NDV — each chunk carries a
+    KMV distinct sketch (k smallest value hashes), sketches union in the
+    driver-side merge, and the estimate is (K-1)/kth_min."""
+    return merge_partials(
+        sample_stats(
+            df, pt_col=pt_col, sort_cols=sort_cols, fraction=fraction, seed=seed
+        ).toPandas()
+    )
 
 
 def plan_from_stats(df, **kwargs) -> dict[str, str]:

@@ -878,3 +878,45 @@ def test_salt_plan_write_crash_leaves_no_part_file(spark, tmp_path, monkeypatch)
     s = encode_job(spark, df, out, run_id="c2")
     assert s["groups_encoded"] == s["groups_total"]
     assert load_salt_plan(spark, out)
+
+
+def test_colmeta_write_crash_keeps_previous_sidecar(spark, tmp_path, monkeypatch):
+    """A crash midway through rewriting the colmeta sidecar leaves the
+    previous sidecar whole, so the next resume and decode still read it."""
+    import builtins
+
+    from bids2table_spark import manifest
+
+    class _TornFile:
+        def __init__(self, fh):
+            self.fh = fh
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.fh.close()
+
+        def write(self, text):
+            self.fh.write(text[: len(text) // 2])
+            self.fh.flush()
+            raise OSError("disk full")
+
+    def torn_open(path, mode="r", *args, **kw):
+        fh = builtins.open(path, mode, *args, **kw)
+        return _TornFile(fh) if "w" in mode and "colmeta" in str(path) else fh
+
+    df = synth_transcripts(spark, n_conv=60, seed=3, n_pt=2)
+    out = str(tmp_path / "cm")
+    encode_job(spark, df, out, run_id="m1", target_group_rows=512, max_groups=1)
+    before = manifest._load_colmeta(out)
+    assert before.get("__columns__")
+    monkeypatch.setattr(manifest, "open", torn_open, raising=False)
+    with pytest.raises(OSError, match="disk full"):
+        encode_job(spark, df, out, run_id="m2", target_group_rows=512)
+    monkeypatch.undo()
+    assert manifest._load_colmeta(out) == before
+    assert [f for f in os.listdir(out) if "colmeta" in f] == ["colmeta.json"]
+    s = encode_job(spark, df, out, run_id="m3", target_group_rows=512)
+    assert s["groups_skipped"] == 1 and s["groups_failed"] == 0
+    pd.testing.assert_frame_equal(_sorted(df), _sorted(decode_job(spark, out)))

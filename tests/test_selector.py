@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from bids2table_spark.selector import choose_codec_local, estimate_int_sizes, estimate_str_sizes
@@ -60,14 +61,27 @@ def test_stats_pass_is_salted_and_mergeable(spark):
     """Scale guard: the sampling pass must fan out over (pt, salt) chunks —
     round-1 ran one task per pt — and the merged frame must agree with a
     direct single-chunk computation on the stats that merge exactly."""
-    from bids2table_spark.stats import merged_stats, sample_stats
+    import pyarrow.compute as pc
+
+    from bids2table_spark.stats import _col_partial, _stats_fields, merge_partials, merged_stats, sample_stats
 
     df = synth_transcripts(spark, n_conv=300, seed=9, n_pt=2).cache()
-    partial = sample_stats(df, fraction=1.0, salts_per_pt=4).toPandas()
+    partial = sample_stats(df, fraction=1.0).toPandas()
     # fan-out: several salt chunks per pt actually materialized
     assert partial.groupby("pt")["salt"].nunique().min() >= 2
-    merged = merged_stats(df, fraction=1.0, salts_per_pt=4)
-    one = merged_stats(df, fraction=1.0, salts_per_pt=1)
+    merged = merged_stats(df, fraction=1.0)
+    # reference: each whole pt as ONE chunk, sorted like the pass sorts
+    tbl = df.toArrow().sort_by(
+        [("pt", "ascending"), ("conv_id", "ascending"), ("turn_idx", "ascending")]
+    )
+    rows = []
+    for pt in pc.unique(tbl.column("pt")).to_pylist():
+        sub = tbl.filter(pc.equal(tbl.column("pt"), pt))
+        rows += [
+            _col_partial(pt, 0, name, phys, sub.column(name).combine_chunks(), trial=True)
+            for name, phys in _stats_fields(df, "pt")
+        ]
+    one = merge_partials(pd.DataFrame(rows))
     m = merged.set_index(["pt", "column"]).sort_index()
     o = one.set_index(["pt", "column"]).sort_index()
     # exact merges: counts, byte totals, FOR frame width
@@ -95,49 +109,25 @@ def test_partial_keys_match_ddl():
 
     ddl_fields = {f.strip().split(" ")[0] for f in PARTIAL_DDL.split(",")}
     samples = {
-        "int": pd.Series([1, 2, 3], dtype="int32"),
-        "long": pd.Series([10, 20, 20], dtype="int64"),
-        "timestamp": pd.Series(pd.to_datetime([1e9, 2e9], unit="s")),
-        "timestamp_ntz": pd.Series(pd.to_datetime([1e9, 2e9], unit="s")),
-        "boolean": pd.Series([True, False, True]),
-        "date": pd.Series(pd.to_datetime(["2024-01-01", "2024-01-02"]).date),
-        "string": pd.Series(["aaa", "bbb", "aaa"]),
-        "binary": pd.Series([b"xy", b"zw"]),
-        "double": pd.Series([1.5, 2.5], dtype="float64"),
-        "float": pd.Series([1.5, 2.5], dtype="float32"),
+        "int": pa.array([1, 2, 3], pa.int32()),
+        "long": pa.array([10, 20, 20], pa.int64()),
+        "timestamp": pa.array(pd.to_datetime([1e9, 2e9], unit="s")),
+        "timestamp_ntz": pa.array(pd.to_datetime([1e9, 2e9], unit="s")),
+        "boolean": pa.array([True, False, True]),
+        "date": pa.array(pd.to_datetime(["2024-01-01", "2024-01-02"]).date),
+        "string": pa.array(["aaa", "bbb", "aaa"]),
+        "binary": pa.array([b"xy", b"zw"]),
+        "double": pa.array([1.5, 2.5], pa.float64()),
+        "float": pa.array([1.5, 2.5], pa.float32()),
     }
     assert set(samples) == set(_STATS_PHYS)
-    for phys, series in samples.items():
-        out = _col_partial("p", 0, "c", phys, series)
+    for phys, arr in samples.items():
+        out = _col_partial("p", 0, "c", phys, arr, trial=True)
         assert set(out) == ddl_fields, f"phys={phys}: keys != PARTIAL_DDL"
-        empty = _col_partial("p", 0, "c", phys, series.iloc[:0])
+        empty = _col_partial("p", 0, "c", phys, arr.slice(0, 0), trial=True)
         assert set(empty) == ddl_fields, f"phys={phys}: empty-series keys != PARTIAL_DDL"
     # STATS_COLUMNS must be derivable: shared names + the merge-only extras
     assert set(STATS_COLUMNS) - {"entropy", "w_for"} <= ddl_fields
-
-
-def _stats_row_from_partial(p: dict, phys: str) -> pd.DataFrame:
-    """One-chunk mirror of merged_stats's row construction, so a pure-pandas
-    test can feed build_plan exactly what the Spark pass would produce."""
-    from bids2table_spark.codecs.bitpack import bit_width
-    from bids2table_spark.stats import STATS_COLUMNS, _entropy_from_hist, _kmv_estimate
-
-    hist = (
-        np.frombuffer(p["hist"], dtype=np.int64)
-        if len(p["hist"])
-        else np.zeros(256, dtype=np.int64)
-    )
-    row = {
-        "pt": p["pt"], "column": p["column"], "phys": phys, "n": p["n"],
-        "ndv": _kmv_estimate([p["kmv"]]) or p["ndv"], "runs": p["runs"],
-        "w_for": bit_width(int(p["vmax"]) - int(p["vmin"])),
-        "w_delta": p["w_delta"], "total_bytes": p["total_bytes"],
-        "entropy": _entropy_from_hist(hist),
-        "fsst_sample_ratio": p["fsst_sample_ratio"], "alp_hit": p["alp_hit"],
-        "w_alp": p["w_alp"], "for_pbytes": p["for_pbytes"],
-        "delta_pbytes": p["delta_pbytes"],
-    }
-    return pd.DataFrame([row], columns=STATS_COLUMNS)
 
 
 def test_tiers_agree_on_same_stats():
@@ -146,7 +136,7 @@ def test_tiers_agree_on_same_stats():
     now share one cost model — identical stats => identical choice, and the
     low-NDV int fixture must pick dict in BOTH."""
     from bids2table_spark.selector import build_plan
-    from bids2table_spark.stats import _col_partial
+    from bids2table_spark.stats import _col_partial, merge_partials
 
     rng = np.random.default_rng(5)
     fixtures = {
@@ -158,8 +148,8 @@ def test_tiers_agree_on_same_stats():
     }
     for name, (series, phys) in fixtures.items():
         local = choose_codec_local(series, phys)
-        p = _col_partial("p", 0, name, phys, series)
-        plan = build_plan(_stats_row_from_partial(p, phys))
+        p = _col_partial("p", 0, name, phys, pa.array(series), trial=True)
+        plan = build_plan(merge_partials(pd.DataFrame([p])))
         assert plan[f"p/{name}"] == local, f"{name}: tiers disagree"
     assert choose_codec_local(fixtures["low_ndv_int"][0], "long") == "dict"
 
@@ -182,7 +172,7 @@ def test_list_columns_in_stats_pass(spark):
         )
         .cache()
     )
-    stats = merged_stats(df, fraction=1.0, salts_per_pt=2)
+    stats = merged_stats(df, fraction=1.0)
     lst = stats[stats["column"] == "marks"]
     assert len(lst) == 2 and set(lst["phys"]) == {"list<int>"}
     assert (lst["n"] > 0).all() and (lst["total_bytes"] > 0).all()
@@ -200,6 +190,83 @@ def test_list_columns_in_stats_pass(spark):
     df.unpersist()
 
 
+def _typed_stats_df(spark):
+    """NULLs in every physical type the stats pass reads, plus a double
+    column holding NaN next to its NULLs."""
+    from pyspark.sql import functions as F
+
+    h = F.xxhash64("conv_id", "turn_idx")
+
+    def null(k):
+        return F.pmod(h, F.lit(k)) == 0
+
+    return synth_transcripts(spark, n_conv=60, seed=4, n_pt=2).select(
+        "pt", "conv_id", "turn_idx",
+        F.when(~null(7), F.pmod(h, F.lit(1000)).cast("int")).alias("i32"),
+        F.when(~null(5), F.pmod(h, F.lit(100000))).alias("i64"),
+        F.when(~null(6), F.col("turn_idx") % 3 == 0).alias("flag"),
+        F.when(~null(4), F.to_date("ts")).alias("day"),
+        F.when(~null(8), F.col("ts")).alias("ts2"),
+        F.when(~null(3), F.col("role")).alias("s"),
+        F.when(~null(9), F.encode("text", "utf-8")).alias("bin"),
+        F.when(~null(5), F.pmod(h, F.lit(10000)) / 100.0).alias("dbl"),
+        F.when(~null(6), (F.pmod(h, F.lit(1000)) / 8.0).cast("float")).alias("flt"),
+        F.when(~null(7), F.sequence(F.lit(0), F.pmod(h, F.lit(5)).cast("int"))).alias("lst"),
+        F.when(null(5), F.lit(None))
+        .when(null(3), F.lit(float("nan")))
+        .otherwise(F.pmod(h, F.lit(100)) / 4.0)
+        .alias("nan_dbl"),
+    )
+
+
+def test_stats_pass_typed_columns(spark):
+    """The Spark stats pass over NULL-bearing columns of every physical
+    type: one row per (pt, column) with the full row count, a plan entry
+    for every column that encode honours bit-identically, and float NaN
+    counted as a value (the encode kernel's view), not dropped like NULL."""
+    import pyarrow.compute as pc
+
+    from bids2table_spark.decode import decode_table
+    from bids2table_spark.encode import encode_table
+    from bids2table_spark.selector import build_plan
+    from bids2table_spark.stats import merged_stats
+
+    df = _typed_stats_df(spark).cache()
+    key = [("conv_id", "ascending"), ("turn_idx", "ascending")]
+    src = df.toArrow().sort_by(key)
+    cols = [c for c in df.columns if c != "pt"]
+    stats = merged_stats(df, fraction=1.0)
+    rows_per_pt = src.group_by("pt").aggregate([("pt", "count")]).to_pydict()
+    rows_per_pt = dict(zip(rows_per_pt["pt"], rows_per_pt["pt_count"]))
+    assert len(stats) == len(rows_per_pt) * len(cols)
+    assert not stats.duplicated(["pt", "column"]).any()
+    plain = stats[stats["column"] != "lst"]  # list n counts child values
+    assert (plain["n"] == plain["pt"].map(rows_per_pt)).all()
+    plan = build_plan(stats)
+    assert set(plan) == {f"{pt}/{c}" for pt in rows_per_pt for c in cols}
+
+    blocks = encode_table(df, plan=plan, target_group_rows=4096).cache()
+    assert {r["codec"] for r in blocks.select("codec").distinct().collect()} <= set(plan.values())
+    dec = decode_table(blocks).toArrow().sort_by(key)
+
+    def bits(tbl):  # float.hex keeps NaN, -0.0 and NULL apart
+        return [
+            [v.hex() if isinstance(v, float) else v for v in tbl.column(c).to_pylist()]
+            for c in cols
+        ]
+
+    assert bits(dec) == bits(src)
+    blocks.unpersist()
+
+    for pt, g in stats[stats["column"] == "nan_dbl"].groupby("pt"):
+        vals = src.filter(pc.equal(src.column("pt"), pt)).column("nan_dbl").drop_null()
+        v = vals.to_numpy()
+        assert np.isnan(v).any()
+        assert int(g["total_bytes"].iloc[0]) == 8 * len(v)
+        assert int(g["ndv"].iloc[0]) == len(pd.unique(v))  # < KMV k: exact
+    df.unpersist()
+
+
 def test_patched_costs_flow_into_plan():
     """An int column with rare huge outliers: patched FOR/delta byte sums
     must make the global plan prefer forbp/delta over plain, matching the
@@ -210,7 +277,7 @@ def test_patched_costs_flow_into_plan():
     rng = np.random.default_rng(3)
     vals = rng.integers(0, 100, 5000)
     vals[::512] = 2**60  # outliers: global width 61 bits, patched ~7 bits
-    p = _col_partial("pt0", 0, "x", "long", pd.Series(vals))
+    p = _col_partial("pt0", 0, "x", "long", pa.array(vals), trial=True)
     assert p["for_pbytes"] > 0 and p["delta_pbytes"] > 0
     # patched estimate is far below the global-width estimate
     assert p["for_pbytes"] < 61 * len(vals) / 8 / 4
